@@ -27,8 +27,10 @@ src/lib.rs:158,173) so query time is a single dot product.
 from __future__ import annotations
 
 import json
+import math
 import os
 import shutil
+import sys
 from typing import Any
 
 from pyspark.sql import Column, DataFrame, SparkSession
@@ -36,9 +38,9 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from nano_vectordb_rs_spark.functions.vector import (
-    array_lit,
     as_double_array,
     dot_expr,
+    json_array_lit,
     norm_expr,
     qcol,
 )
@@ -62,6 +64,60 @@ class SnapshotInUseError(ValueError):
     handle's current in-memory state.  A distinct type (not a bare
     ValueError) so retention sweeps can skip exactly this benign case
     while still surfacing real errors like a vanished version."""
+
+
+def _local_relation(
+    spark: SparkSession, schema: T.StructType, columns: list[list[Any]]
+) -> DataFrame:
+    """A driver-built relation (one Python list per field of ``schema``)
+    shipped as an Arrow table, so the plan holds a ``LocalRelation``: no
+    pickled rows for the JVM to unpickle, as ``createDataFrame(tuples)``'s
+    ``LogicalRDD`` has.  Each column is built with its field's Arrow type,
+    so an empty list keeps its type and the cast to ``schema`` is a no-op."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_type
+
+    table = pa.table(
+        {
+            f.name: pa.array(values, to_arrow_type(f.dataType))
+            for f, values in zip(schema.fields, columns)
+        }
+    )
+    return spark.createDataFrame(table, schema)
+
+
+def _id_relation(
+    spark: SparkSession, ids: list[Any], id_type: T.DataType = T.StringType()
+) -> DataFrame:
+    """The ``__id__`` relation of an id list, as a ``_local_relation``."""
+    return _local_relation(
+        spark, T.StructType([T.StructField(ID_COL, id_type, True)]), [ids]
+    )
+
+
+def _finite_rescaled(vec: list[float], what: str) -> tuple[list[float], float]:
+    """``vec`` and its left-to-right double sum of squares, guarded for a
+    driver-side normalize.  A null or non-finite component raises
+    ``ValueError``.  When the sum of squares overflows or underflows the
+    normal double range, the vector is first multiplied by the power of
+    two that brings its largest component into [0.5, 1): the scaling is
+    exact (bar components that become subnormal), so its unit vector is the
+    one of the unscaled input: an overflowed norm would score every row
+    0.0, an underflowed one would reject a nonzero vector as zero.
+    In range the vector is returned as is, so its bits match the plain
+    ``x / sqrt(sum(x * x))``."""
+    for i, x in enumerate(vec):
+        if x is None or not math.isfinite(x):
+            raise ValueError(f"{what} has a non-finite component {x!r} at index {i}")
+    v = [float(x) for x in vec]
+    s = sum(x * x for x in v)
+    if not sys.float_info.min <= s < math.inf:
+        top = max(map(abs, v), default=0.0)
+        if top > 0:
+            scale = math.ldexp(1.0, -math.frexp(top)[1])
+            v = [x * scale for x in v]
+            s = sum(x * x for x in v)
+    return v, s
 
 
 class VectorCollection:
@@ -89,6 +145,10 @@ class VectorCollection:
         # create); cleared by the first upsert. Purely an optimization flag:
         # False never changes behavior, it just runs the existing-ids probe.
         self._known_empty = False
+        # the batch caches upsert() made since _df was last re-read from
+        # Parquet: the merged plan reads them until save() or
+        # save_snapshot() re-reads it, which then releases them
+        self._batch_caches: list[DataFrame] = []
         if path and os.path.exists(os.path.join(path, _SIDECAR)):
             with open(os.path.join(path, _SIDECAR)) as f:
                 self._additional = json.load(f)
@@ -135,32 +195,6 @@ class VectorCollection:
         col._known_empty = True
         return col
 
-    # -- ingest guards ------------------------------------------------------
-
-    def _validate_and_normalize(self, batch: DataFrame, strict: bool = True) -> DataFrame:
-        """Q4/Q5 guards + normalize-at-write. ``strict`` raises on bad rows
-        (reference panics, src/lib.rs:324-328,352-355); non-strict filters."""
-        dim_ok = F.size(VECTOR_COL) == self.embedding_dim
-        v = as_double_array(VECTOR_COL)
-        norm = F.expr(norm_expr(v))
-        if strict:
-            bad = batch.filter(~dim_ok | (norm <= 0) | F.isnan(norm)).limit(1).collect()
-            if bad:
-                row = bad[0]
-                if len(row[VECTOR_COL]) != self.embedding_dim:
-                    raise DimensionError(
-                        f"vector for id={row[ID_COL]!r} has dim {len(row[VECTOR_COL])}, "
-                        f"expected {self.embedding_dim}"
-                    )
-                raise ZeroVectorError(f"zero/invalid-norm vector for id={row[ID_COL]!r}")
-        # JVM-side ML normalize (no Python hop); bit-identical to the HOF
-        # zip_with/array_repeat formulation — both take a double norm and
-        # truncate the double quotient to float32 — and ~40% faster on the
-        # 100k×1024 micro (see fastknn.normalize_ml).
-        from nano_vectordb_rs_spark.operators.fastknn import normalize_ml
-
-        return normalize_ml(batch.filter(dim_ok & (norm > 0)), VECTOR_COL)
-
     # -- O2: upsert ---------------------------------------------------------
 
     def upsert(self, batch: DataFrame) -> dict[str, list[str]]:
@@ -186,7 +220,9 @@ class VectorCollection:
         no duplicate ids (the common ingest shape — the optimizer cannot
         know this, the collected report proves it), and replaces the merge
         plan's batch-side broadcast subtree with a local id relation, so
-        the anti join never re-traverses the batch lineage."""
+        the anti join never re-traverses the batch lineage.  The batch cache
+        is held until the next ``save()``/``save_snapshot()`` re-reads the
+        collection from Parquet, then released."""
         from pyspark.sql.window import Window
 
         from nano_vectordb_rs_spark.operators.fastknn import normalize_ml
@@ -206,21 +242,23 @@ class VectorCollection:
         info = annotated.select(
             ID_COL, "__batch_pos__", "__dim__", "__norm__"
         ).collect()
-        import math
-
         for r in info:
             # same per-row predicate the old limit(1) probe used:
             # ~dim_ok | (norm <= 0) | isnan(norm), first offender raises
+            # (and drops the cache, which nothing will read)
             if r["__dim__"] != self.embedding_dim:
+                annotated.unpersist()
                 raise DimensionError(
                     f"vector for id={r[ID_COL]!r} has dim {r['__dim__']}, "
                     f"expected {self.embedding_dim}"
                 )
             n = r["__norm__"]
             if n is None or not (n > 0) or math.isnan(n):
+                annotated.unpersist()
                 raise ZeroVectorError(
                     f"zero/invalid-norm vector for id={r[ID_COL]!r}"
                 )
+        self._batch_caches.append(annotated)
         # LWW winners + batch-order report, derived driver-side
         last_pos: dict[str, int] = {}
         for r in info:
@@ -250,13 +288,7 @@ class VectorCollection:
         ).drop("__batch_pos__", "__dim__", "__norm__")
         # local id relation (typed like the batch id column): broadcasting
         # it costs no batch re-traversal in the probe or the merge plan
-        id_field = batch.schema[ID_COL]
-        ids_df = self.spark.createDataFrame(
-            [(i,) for i in batch_ids],
-            T.StructType(
-                [T.StructField(ID_COL, id_field.dataType, id_field.nullable)]
-            ),
-        )
+        ids_df = _id_relation(self.spark, batch_ids, batch.schema[ID_COL].dataType)
         if self._known_empty:
             # provably-empty collection (fresh create, nothing upserted yet):
             # every id is an insert — skip the probe job entirely
@@ -296,20 +328,28 @@ class VectorCollection:
 
         ``where`` may be any Column predicate — the Spark generalization of the
         reference's DataFilter closure (src/lib.rs:112), but optimizable.
+
+        The query is normalized on the driver (O3a, hoisted out of the scan)
+        and shipped as ONE folded ``array<double>`` literal (``json_array_lit``),
+        so the plan's size and its build time do not grow with the
+        dimension.  A null or non-finite component raises ``ValueError``,
+        an all-zero vector ``ZeroVectorError``; the norm cannot overflow
+        (see ``_finite_rescaled``).
         """
         if len(query_vector) != self.embedding_dim:
             raise DimensionError(
                 f"query dim {len(query_vector)} != collection dim {self.embedding_dim}"
             )
-        qnorm = sum(x * x for x in query_vector) ** 0.5
-        if qnorm <= 0:
+        v, sumsq = _finite_rescaled(query_vector, "query vector")
+        if sumsq == 0:
             raise ZeroVectorError("zero query vector")
-        q = [x / qnorm for x in query_vector]  # O3a, hoisted to the driver
+        qnorm = sumsq ** 0.5
+        q = [x / qnorm for x in v]
 
         df = self._df
         if where is not None:
             df = df.filter(where)
-        score = F.expr(dot_expr(as_double_array(VECTOR_COL), array_lit(q)))
+        score = F.expr(dot_expr(as_double_array(VECTOR_COL), json_array_lit(q)))
         df = df.withColumn(METRICS_COL, score)
         if better_than is not None:
             df = df.filter(F.col(METRICS_COL) >= float(better_than))
@@ -327,12 +367,34 @@ class VectorCollection:
         lacks (its query() is one vector per call, src/lib.rs:188-260; N
         calls = N full scans; here N queries share ONE corpus scan).
 
-        The query block is broadcast and normalized on the fly; ranking is a
-        per-query-id window, so the shuffle carries only scored pairs.
+        The query block is collected once and guarded on the driver, first
+        offender in row order: ``DimensionError`` for a wrong dimension, ``ZeroVectorError`` for a zero norm, ``ValueError`` for
+        a null or non-finite component.  It is then shipped back as an
+        Arrow local relation, broadcast, and unit-normalized JVM-side
+        (``normalize_ml``, the ingest normalizer); ranking is a per-query-id
+        window, so the shuffle carries only scored pairs.
         Returns (query_id, __id__, metadata..., __metrics__, rank)."""
         from pyspark.sql.window import Window
 
-        qnorm = self._validate_and_normalize(queries).select(
+        from nano_vectordb_rs_spark.operators.fastknn import normalize_ml
+
+        block = queries.select(ID_COL, VECTOR_COL)
+        ids, vecs = [], []
+        for row in block.collect():
+            qid, vec = row[ID_COL], row[VECTOR_COL]
+            if vec is None or len(vec) != self.embedding_dim:
+                raise DimensionError(
+                    f"vector for id={qid!r} has dim {None if vec is None else len(vec)}, "
+                    f"expected {self.embedding_dim}"
+                )
+            v, sumsq = _finite_rescaled(vec, f"vector for id={qid!r}")
+            if sumsq == 0:
+                raise ZeroVectorError(f"zero/invalid-norm vector for id={qid!r}")
+            ids.append(qid)
+            vecs.append(v)
+        qnorm = normalize_ml(
+            _local_relation(self.spark, block.schema, [ids, vecs]), VECTOR_COL
+        ).select(
             F.col(ID_COL).alias("__query_id__"),
             F.col(VECTOR_COL).alias("__query_vec__"),
         )
@@ -362,23 +424,32 @@ class VectorCollection:
 
         ``ordered=True`` returns rows in requested-id order, matching the
         reference's sequential lookup loop — a broadcast inner join tagged
-        with the request position, so still a single scan, no shuffle."""
+        with the request position, so still a single scan, no shuffle.
+        The requested ids travel as an Arrow local relation."""
+        ids = [str(i) for i in ids]
         if ordered:
-            ids_df = self.spark.createDataFrame(
-                [(str(i), p) for p, i in enumerate(ids)], f"{ID_COL} string, __pos__ int"
+            ids_df = _local_relation(
+                self.spark,
+                T.StructType(
+                    [
+                        T.StructField(ID_COL, T.StringType(), True),
+                        T.StructField("__pos__", T.IntegerType(), True),
+                    ]
+                ),
+                [ids, list(range(len(ids)))],
             )
             return (
                 self._df.join(F.broadcast(ids_df), ID_COL)
                 .orderBy("__pos__")
                 .drop("__pos__")
             )
-        ids_df = self.spark.createDataFrame([(str(i),) for i in ids], f"{ID_COL} string")
+        ids_df = _id_relation(self.spark, ids)
         return self._df.join(F.broadcast(ids_df), ID_COL, "left_semi")
 
     def delete(self, ids: list[str]) -> None:
         """Anti-join removal (src/lib.rs:273-286); cannot desynchronize
         anything because the vector column is canonical (fixes quirk Q1)."""
-        ids_df = self.spark.createDataFrame([(str(i),) for i in ids], f"{ID_COL} string")
+        ids_df = _id_relation(self.spark, [str(i) for i in ids])
         self._df = self._df.join(F.broadcast(ids_df), ID_COL, "left_anti")
 
     # -- O6: save -----------------------------------------------------------
@@ -457,6 +528,14 @@ class VectorCollection:
             shutil.rmtree(old)
         self.path = path
         self._df = self.spark.read.parquet(path)
+        self._release_batch_caches()
+
+    def _release_batch_caches(self) -> None:
+        """Unpersist upsert's batch caches once ``_df`` reads Parquet again
+        and no longer needs them."""
+        for cached in self._batch_caches:
+            cached.unpersist()
+        self._batch_caches.clear()
 
     def compact(self, target_rows_per_file: int = 500_000) -> int:
         """Rewrite the collection into ``ceil(count / target)`` parquet files
@@ -549,6 +628,7 @@ class VectorCollection:
         # plan. Safe because snapshots are never deleted or overwritten —
         # a future retention API must re-point readers before reclaiming.
         self._df = self.spark.read.parquet(target)
+        self._release_batch_caches()
         manifest = os.path.join(root, "manifest.json")
         tmp = manifest + ".tmp"
         with open(tmp, "w") as f:

@@ -18,6 +18,8 @@ across engines; declared queries round to 6 decimals on top of that.
 
 from __future__ import annotations
 
+import json
+
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
@@ -64,6 +66,21 @@ def array_lit(values: list[float]) -> str:
     and both Spark and DuckDB parse decimal literals to the nearest double,
     so the same text yields the same bits in both engines."""
     return "array(" + ", ".join(f"CAST({v!r} AS DOUBLE)" for v in values) + ")"
+
+
+def json_array_lit(values: list[float]) -> str:
+    """A double array as ONE literal node, whatever its length: the drop-in
+    for ``array_lit`` when the array is long and built per call.
+
+    ``array_lit`` writes a dim-term ``array(CAST(..))`` expression that
+    Spark parses and analyses node by node on every call; here the values
+    travel as one JSON string token that ConstantFolding turns into a
+    single ``array<double>`` literal.  json.dumps writes each float's
+    repr() (no quote or backslash can occur) and Spark's JSON reader parses
+    it to the nearest double, so the bits equal ``array_lit``'s.  Non-finite
+    values are refused: JSON has no NaN/Infinity, and Spark would read them
+    as null."""
+    return f"from_json('{json.dumps(values, allow_nan=False)}', 'array<double>')"
 
 
 def normalize_expr(a: str) -> str:

@@ -104,7 +104,7 @@ def test_dup_ids_in_batch_last_writer_wins(spark, coll):
 
 def test_get_missing_ids_silently_dropped(spark, coll):
     coll.upsert(make_batch(spark, [("a", [1, 0, 0, 0], None), ("b", [0, 1, 0, 0], None)]))
-    got = coll.get(["a", "nope", "b", "also-nope"])
+    got = coll.get(["a", "nope", "b", "also-nope", "b"])
     assert sorted(r["__id__"] for r in got.collect()) == ["a", "b"]
 
 
@@ -119,6 +119,9 @@ def test_get_ordered_matches_request_order(spark, coll):
     )
     got = coll.get(["c", "missing", "a", "b"], ordered=True)
     assert [r["__id__"] for r in got.collect()] == ["c", "a", "b"]
+    # a repeated id yields one row per requested position
+    got = coll.get(["b", "zz", "a", "b"], ordered=True)
+    assert [r["__id__"] for r in got.collect()] == ["b", "a", "b"]
     assert "__pos__" not in got.columns
 
 
@@ -284,6 +287,228 @@ def test_query_batch_matches_single_queries(spark, tmp_path):
     # where-predicate restriction applies per query
     filtered = c.query_batch(queries, top_k=3, where="tag = 't1'")
     assert all(r["tag"] == "t1" for r in filtered.collect())
+
+
+# -- driver-built plan inputs: query literal, id relations, query block ----
+
+
+def _expression_count(plan) -> int:
+    """Expression nodes in a JVM logical plan, summed over all operators."""
+
+    def seq(s):
+        return [s.apply(i) for i in range(s.size())]
+
+    def expr(e):
+        return 1 + sum(expr(c) for c in seq(e.children()))
+
+    return sum(expr(e) for e in seq(plan.expressions())) + sum(
+        _expression_count(c) for c in seq(plan.children())
+    )
+
+
+def _random_collection(spark, tmp_path, dim, n=200, name="big"):
+    import random
+
+    rng = random.Random(dim)
+    c = VectorCollection.open(spark, dim, str(tmp_path / name), SCHEMA)
+    c.upsert(
+        make_batch(
+            spark,
+            [(f"r{i}", [rng.gauss(0, 1) for _ in range(dim)], f"t{i % 3}") for i in range(n)],
+        )
+    )
+    c.save()
+    return c, rng
+
+
+def test_query_scores_bit_identical_to_array_lit_at_dim_1024(spark, tmp_path):
+    """The one-literal query path scores every row with the same bits as
+    the per-element ``array(CAST(..))`` literal it replaced."""
+    from pyspark.sql import functions as F
+
+    from nano_vectordb_rs_spark.functions.vector import array_lit, as_double_array, dot_expr
+
+    c, rng = _random_collection(spark, tmp_path, 1024)
+    for _ in range(2):
+        raw = [rng.gauss(0, 1) for _ in range(1024)]
+        qnorm = sum(x * x for x in raw) ** 0.5
+        old = (
+            c.df.withColumn(
+                "__metrics__",
+                F.expr(dot_expr(as_double_array("vector"), array_lit([x / qnorm for x in raw]))),
+            )
+            .orderBy(F.col("__metrics__").desc(), F.col("__id__").asc())
+            .limit(200)
+        )
+        new = c.query(raw, top_k=200)
+        want = [(r["__id__"], r["__metrics__"]) for r in old.collect()]
+        got = [(r["__id__"], r["__metrics__"]) for r in new.collect()]
+        assert len(got) == 200 and got == want
+
+
+def test_query_plan_size_does_not_grow_with_dimension(spark, tmp_path):
+    from nano_vectordb_rs_spark.plans import audit_plan
+
+    counts = {}
+    for dim in (4, 1024):
+        c, rng = _random_collection(spark, tmp_path, dim, n=20, name=f"d{dim}")
+        df = c.query([rng.gauss(0, 1) for _ in range(dim)], top_k=5, where="tag = 't1'")
+        counts[dim] = _expression_count(df._jdf.queryExecution().analyzed())
+        # still the bounded top-k, never a global sort
+        assert audit_plan(df)["has_take_ordered"]
+    assert counts[4] == counts[1024]
+
+
+def test_query_rejects_non_finite_components(spark, coll):
+    coll.upsert(make_batch(spark, [("a", [1, 0, 0, 0], None)]))
+    for bad in ([math.inf, 0, 0, 0], [math.nan, 1, 0, 0], [1, None, 0, 0]):
+        with pytest.raises(ValueError, match="non-finite component"):
+            coll.query(bad)
+
+
+def test_query_norm_does_not_overflow_or_underflow(spark, coll):
+    coll.upsert(
+        make_batch(spark, [("a", [1, 1, 0, 0], None), ("b", [1, 0, 0, 0], None), ("c", [0, 0, 1, 0], None)])
+    )
+
+    def scores(q):
+        return [(r["__id__"], r["__metrics__"]) for r in coll.query(q, top_k=3).collect()]
+
+    for scale in (1e200, 1e-200):
+        big, unit = scores([scale, scale, 0, 0]), scores([1, 1, 0, 0])
+        assert [i for i, _ in big] == [i for i, _ in unit] == ["a", "b", "c"]
+        assert all(abs(x - y) <= 1e-15 for (_, x), (_, y) in zip(big, unit))
+        assert big[0][1] > 0.99
+    # a power-of-two multiple is exact: same bits as the unscaled query
+    assert scores([2.0**600, 2.0**600, 0, 0]) == scores([1, 1, 0, 0])
+
+
+def test_get_and_delete_with_empty_id_lists(spark, coll):
+    coll.upsert(make_batch(spark, [("a", [1, 0, 0, 0], None)]))
+    assert coll.get([]).collect() == []
+    assert coll.get([], ordered=True).collect() == []
+    coll.delete([])
+    assert coll.count() == 1
+
+
+def test_ids_with_quotes_backticks_and_non_ascii(spark, coll):
+    odd = ["it's", "back`tick", "ünï•cødé", "日本語", 'dq"', "a,b"]
+    coll.upsert(
+        make_batch(spark, [(i, [1, n, 0, 0], None) for n, i in enumerate(odd)])
+    )
+    assert sorted(r["__id__"] for r in coll.get(odd).collect()) == sorted(odd)
+    assert [r["__id__"] for r in coll.get(odd[::-1], ordered=True).collect()] == odd[::-1]
+    report = coll.upsert(make_batch(spark, [(odd[0], [0, 0, 1, 0], "x"), ("new", [0, 0, 0, 1], None)]))
+    assert report == {"updated": [odd[0]], "inserted": ["new"]}
+    coll.delete(odd[1:3])
+    assert sorted(r["__id__"] for r in coll.df.collect()) == sorted(
+        [odd[0], *odd[3:], "new"]
+    )
+
+
+def test_upsert_keeps_bigint_id_type(spark, tmp_path):
+    path = str(tmp_path / "bigint")
+    schema = "`__id__` bigint, vector array<float>, tag string"
+    spark.createDataFrame(
+        [(1, [1.0, 0.0, 0.0, 0.0], "a"), (2, [0.0, 1.0, 0.0, 0.0], "b")], schema
+    ).write.parquet(path)
+    c = VectorCollection.open(spark, DIM, path)
+    report = c.upsert(
+        spark.createDataFrame(
+            [(3, [0.0, 0.0, 1.0, 0.0], "c"), (2, [1.0, 1.0, 0.0, 0.0], "b2"), (3, [0.0, 0.0, 0.0, 1.0], "c2")],
+            schema,
+        )
+    )
+    assert report == {"updated": [2], "inserted": [3]}
+    assert c.df.schema["__id__"].dataType == T.LongType()
+    rows = {r["__id__"]: r["tag"] for r in c.df.collect()}
+    assert rows == {1: "a", 2: "b2", 3: "c2"}
+    c.save()
+    assert VectorCollection.open(spark, DIM, path).df.schema["__id__"].dataType == T.LongType()
+
+
+def _query_block(spark, rows, element=T.FloatType()):
+    return spark.createDataFrame(
+        rows,
+        T.StructType(
+            [
+                T.StructField("__id__", T.StringType(), False),
+                T.StructField("vector", T.ArrayType(element), True),
+            ]
+        ),
+    )
+
+
+def test_query_batch_guard_errors_name_the_first_offender(spark, coll):
+    coll.upsert(make_batch(spark, [("a", [1, 0, 0, 0], None)]))
+    ok = ("q0", [1.0, 0.0, 0.0, 0.0])
+    with pytest.raises(DimensionError) as e:
+        coll.query_batch(
+            _query_block(spark, [ok, ("q1", [1.0, 2.0, 3.0]), ("q2", [0.0] * 4)])
+        )
+    assert str(e.value) == "vector for id='q1' has dim 3, expected 4"
+    with pytest.raises(ZeroVectorError) as e:
+        coll.query_batch(
+            _query_block(spark, [ok, ("q1", [0.0] * 4), ("q2", [1.0, 2.0])])
+        )
+    assert str(e.value) == "zero/invalid-norm vector for id='q1'"
+    for bad in ([math.nan, 1.0, 0.0, 0.0], [math.inf, 0.0, 0.0, 0.0], [1.0, None, 0.0, 0.0]):
+        with pytest.raises(ValueError, match="id='q1' has a non-finite component"):
+            coll.query_batch(_query_block(spark, [ok, ("q1", bad)]))
+
+
+def test_query_batch_double_block_with_huge_norm(spark, coll):
+    coll.upsert(
+        make_batch(spark, [("a", [1, 1, 0, 0], None), ("b", [1, 0, 0, 0], None)])
+    )
+    block = _query_block(
+        spark, [("big", [1e200, 1e200, 0.0, 0.0]), ("one", [1.0, 1.0, 0.0, 0.0])], T.DoubleType()
+    )
+    rows = coll.query_batch(block, top_k=2).collect()
+    by_query = {
+        q: [(r["__id__"], r["__metrics__"]) for r in rows if r["__query_id__"] == q]
+        for q in ("big", "one")
+    }
+    assert by_query["big"] == by_query["one"] and by_query["one"][0][0] == "a"
+    assert by_query["one"][0][1] > 0.99
+
+
+def _persistent_rdds(spark) -> int:
+    return spark.sparkContext._jsc.getPersistentRDDs().size()
+
+
+def test_upsert_save_cycles_leave_cache_count_flat(spark, tmp_path):
+    c = VectorCollection.open(spark, DIM, str(tmp_path / "cache"), SCHEMA)
+
+    def cycle(n):
+        c.upsert(make_batch(spark, [(f"id{n}", [1, n, 0, 0], None), ("shared", [0, 1, n, 0], None)]))
+        c.save()
+
+    cycle(0)
+    base = _persistent_rdds(spark)
+    for n in range(1, 6):
+        cycle(n)
+        assert _persistent_rdds(spark) == base
+    assert c.count() == 7
+
+
+def test_deferred_save_keeps_batch_caches_until_save(spark, tmp_path):
+    c = VectorCollection.open(spark, DIM, str(tmp_path / "deferred"), SCHEMA)
+    base = _persistent_rdds(spark)
+    for n in range(3):
+        c.upsert(make_batch(spark, [(f"id{n}", [1, n, 0, 0], None)]))
+    # the unsaved merge plan still reads every batch's cache
+    assert _persistent_rdds(spark) == base + 3
+    c.save()
+    assert _persistent_rdds(spark) == base
+    assert sorted(r["__id__"] for r in c.df.collect()) == ["id0", "id1", "id2"]
+
+
+def test_rejected_upsert_releases_its_cache(spark, coll):
+    base = _persistent_rdds(spark)
+    with pytest.raises(ZeroVectorError):
+        coll.upsert(make_batch(spark, [("z", [0, 0, 0, 0], None)]))
+    assert _persistent_rdds(spark) == base
 
 
 # -- snapshots (time travel) ---------------------------------------------
