@@ -44,11 +44,29 @@ from nano_vectordb_rs_spark.functions.vector import (
     norm_expr,
     qcol,
 )
+from nano_vectordb_rs_spark.sources.tables import SPLIT_BYTES, bytes_width
 
 ID_COL = "__id__"
 METRICS_COL = "__metrics__"
 VECTOR_COL = "vector"
 _SIDECAR = "_additional_data.json"
+# the writer's budget: about one file, hence one scan task, per this many
+# bytes of the collection (see file_width). At dim 1024 on 4 cores, query
+# latency did not depend on the file count below ~1.2 MB of collection and
+# fell with more files from ~1.5 MB up, so a collection is split from 1 MB.
+FILE_BYTES = 512 << 10
+
+
+def file_width(nbytes: int, cores: int) -> int:
+    """Files for a collection of ``nbytes``: one per ``FILE_BYTES``, at most
+    ``cores`` and at least one; past ``cores`` × ``SPLIT_BYTES`` the files
+    stay ``SPLIT_BYTES``-sized and outnumber the cores instead."""
+    return bytes_width(nbytes, cores, FILE_BYTES) or max(1, -(-nbytes // SPLIT_BYTES))
+
+
+def _size_in_bytes(jplan: Any) -> int:
+    """The optimizer's size estimate of a JVM logical plan."""
+    return int(str(jplan.stats().sizeInBytes()))
 
 
 class DimensionError(ValueError):
@@ -166,7 +184,10 @@ class VectorCollection:
             fields += [
                 f for f in metadata_schema.fields if f.name not in (ID_COL, VECTOR_COL)
             ]
-        return spark.createDataFrame([], T.StructType(fields))
+        # a local relation, not an RDD: the optimizer knows its size (0), so
+        # the first save() of a fresh collection sizes its files from the
+        # upserted rows (see _file_width)
+        return _local_relation(spark, T.StructType(fields), [[] for _ in fields])
 
     @classmethod
     def open(
@@ -179,7 +200,12 @@ class VectorCollection:
         """Load an existing collection or create an empty one (reference new(),
         src/lib.rs:116-147). The load-time matrix-size validation
         (src/lib.rs:122-129) becomes a per-row dimension assertion at ingest,
-        which is strictly stronger."""
+        which is strictly stronger.
+
+        The scan keeps the layout it finds: a collection written elsewhere
+        as one Parquet row group scans in ONE task, so every query scores on
+        one core, until its first ``save()`` or ``compact()`` rewrites it
+        core-balanced (see ``save``)."""
         path = os.path.abspath(path)  # see __init__: JVM vs Python cwd
         cls._recover_interrupted_save(path)
         if os.path.exists(path) and any(
@@ -489,6 +515,29 @@ class VectorCollection:
             os.rename(old, path)
             shutil.rmtree(staged, ignore_errors=True)
 
+    def _file_width(self) -> int:
+        """``file_width`` of the optimizer's size estimate of ``_df`` (no
+        job). When a leaf of the plan has no size (an RDD of driver rows
+        gets ``spark.sql.defaultSizeInBytes``, 2**63 - 1, which operators
+        above it scale but never make real), the collection counts as one
+        ``FILE_BYTES`` per core."""
+        cores = self.spark.sparkContext.defaultParallelism
+        plan = self._df._jdf.queryExecution().optimizedPlan()
+        unknown = self.spark._jsparkSession.sessionState().conf().defaultSizeInBytes()
+        leaves = plan.collectLeaves()
+        if any(
+            _size_in_bytes(leaves.apply(i)) >= unknown for i in range(leaves.size())
+        ):
+            return file_width(cores * FILE_BYTES, cores)
+        return file_width(_size_in_bytes(plan), cores)
+
+    def _write(self, target: str, width: int | None = None) -> None:
+        """The one collection writer (``save``, ``save_snapshot``,
+        ``compact``): ``_df`` hash-partitioned on ``__id__`` into ``width``
+        Parquet files, by default ``_file_width()``."""
+        width = width or self._file_width()
+        self._df.repartition(width, ID_COL).write.mode("overwrite").parquet(target)
+
     def save(self, path: str | None = None) -> None:
         """Persist via a crash-safe rename-aside swap: stage the full
         rewrite (parquet + sidecar) beside the target, move the live dir
@@ -501,7 +550,21 @@ class VectorCollection:
         mid-swap crash first restores the target dir; its own write may
         then still fail because the handle's lazy plan can reference
         renamed-away files — reopen to continue — but the store on disk
-        stays whole either way."""
+        stays whole either way.
+
+        Layout: whatever partitioning ``_df`` carries (one giant partition
+        for a single-row-group store plus small upsert batches) is replaced
+        by ``_write``'s: about one file per 512 KB of collection (one file
+        below 1 MB), at most one per core (128 MB files past that, see
+        ``file_width``), rows hash-partitioned on ``__id__``. Each file is
+        one scan task, so every later ``query``, ``query_batch`` and ``get``
+        scores on all cores, with the same results (ties break on
+        ``__id__``; scores are per row). It costs one shuffle of the
+        collection per save."""
+        self._save(path, None)
+
+    def _save(self, path: str | None, width: int | None) -> None:
+        """``save`` writing ``width`` files (``None``: ``_write``'s default)."""
         path = os.path.abspath(path) if path else self.path
         if not path:
             raise ValueError("no storage path configured")
@@ -518,7 +581,7 @@ class VectorCollection:
             # exists, so the aside copy is superseded (and would block the
             # rename-aside below)
             shutil.rmtree(old)
-        self._df.write.mode("overwrite").parquet(staged)
+        self._write(staged, width)
         with open(os.path.join(staged, _SIDECAR), "w") as f:
             json.dump(self._additional, f)
         if os.path.exists(path):
@@ -544,12 +607,13 @@ class VectorCollection:
         tiny files dominate scan planning time. No analogue in the reference
         (its whole store is one JSON file, src/lib.rs:289-293).
 
-        Returns the resulting file count. round_robin repartition (no
-        column argument) spreads rows evenly without a shuffle key."""
+        Returns that file count. It is ``save``'s writer with a row-derived
+        width instead of the size-derived one: rows hash-partitioned on
+        ``__id__``, one shuffle. A hash partition left empty writes no file,
+        so a handful of rows can land in fewer files than returned."""
         n = self.count()
         n_files = max(1, -(-n // max(1, target_rows_per_file)))
-        self._df = self._df.repartition(n_files)
-        self.save()
+        self._save(None, n_files)
         return n_files
 
     # -- snapshots (time travel) ---------------------------------------------
@@ -601,7 +665,9 @@ class VectorCollection:
         """Persist the current state as the next immutable version and
         return its number. The data dir and any prior snapshot are
         untouched; a crash mid-write leaves only an unpublished .staging
-        dir (the manifest is renamed into place last)."""
+        dir (the manifest is renamed into place last). Written by ``save``'s
+        writer, so the version, and this handle reading it afterwards, get
+        the same core-balanced, ``__id__``-hashed layout."""
         root = self._snapshot_root()
         os.makedirs(root, exist_ok=True)
         versions = self.snapshots()
@@ -619,7 +685,7 @@ class VectorCollection:
         v = max(versions + on_disk, default=0) + 1
         target = os.path.join(root, f"v{v}")
         staged = target + ".staging"
-        self._df.write.mode("overwrite").parquet(staged)
+        self._write(staged)
         with open(os.path.join(staged, _SIDECAR), "w") as f:
             json.dump(self._additional, f)
         os.rename(staged, target)
@@ -688,8 +754,9 @@ class VectorCollection:
         bulk).  Plan shape: a full outer join of two parquet scans on the
         id — the one unavoidable shuffle of a diff; at scale both snapshot
         writes would bucket by id so the join is co-partitioned
-        (save_snapshot writes whatever partitioning the plan carries, so a
-        bucketed writer slots in without touching this read path)."""
+        (save_snapshot's files are already hashed on the id, but plain
+        Parquet does not tell the reader; a bucketed ``_write`` slots in
+        without touching this read path)."""
         joined, _ = self._versions_joined(version_a, version_b)
         return joined.filter(F.col("change").isNotNull()).select(ID_COL, "change")
 

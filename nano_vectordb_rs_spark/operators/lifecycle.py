@@ -362,25 +362,22 @@ def compact_roundtrip_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     rewrite lost or altered NOTHING — the silent failure mode of any
     rewrite-in-place maintenance job. ``additional_ok`` asserts the JSON
     sidecar survives the compaction save. At 100 TB ``compact`` is the
-    Delta-OPTIMIZE-shaped job whose round-robin ``repartition(ceil(n /
-    target))`` spreads rows evenly with no skewed shuffle key; here it is
-    the same code path at gate scale."""
+    Delta-OPTIMIZE-shaped job that rewrites the store into ``ceil(n /
+    target)`` files hashed on the (unique) id, so no shuffle key is
+    skewed; here it is the same code path at gate scale."""
     tmp = tempfile.mkdtemp(prefix="nvdb_compact_rt_")
     store = f"{tmp}/col"
     try:
-        # fragment: save the fixture as 16 round-robin shards (all non-empty
-        # at every gate scale — the fixture holds 500 rows; the oracle's
+        # fragment: write the fixture as 16 round-robin shards, the layout a
+        # per-micro-batch or external writer leaves (save() itself would
+        # rewrite it into input-sized files). All 16 are non-empty at every
+        # gate scale — the fixture holds 500 rows; the oracle's
         # LEAST(16, count(*)) also covers the one-row twin, where a single
         # row makes a single file. Only 2..15-row fixtures would be
-        # round-robin-placement-dependent, and no fixture has that shape.)
-        col = VectorCollection(
-            spark,
-            EMBEDDING_DIM,
-            _collection_frame(spark, sf_dir).repartition(16),
-            store,
-        )
+        # round-robin-placement-dependent, and no fixture has that shape.
+        _collection_frame(spark, sf_dir).repartition(16).write.parquet(store)
+        col = VectorCollection.open(spark, EMBEDDING_DIM, store)
         col.store_additional_data(_ADDITIONAL)
-        col.save()
 
         def _n_files() -> int:
             # DATA-BEARING files only: Spark may add an empty schema-carrier

@@ -32,6 +32,20 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return spark.read.parquet(f"{sf_dir}/{name}.parquet")
 
 
+# A split this large already keeps one core busy, so an input of ``cores``
+# such splits gets its parallelism from the scan alone.
+SPLIT_BYTES = 128 << 20
+
+
+def bytes_width(nbytes: int, cores: int, per_task_bytes: int) -> int:
+    """The byte-to-width rule: ~``per_task_bytes`` of input per task,
+    capped at ``cores``. 0 ("add no exchange") when the input is under one
+    task's budget, or when ``SPLIT_BYTES`` splits alone give ``cores`` tasks."""
+    if nbytes // SPLIT_BYTES >= cores:
+        return 0
+    return min(cores, nbytes // max(1, per_task_bytes))
+
+
 def input_sized_width(
     spark: SparkSession, sf_dir: str, name: str, per_task_bytes: int
 ) -> int:
@@ -41,10 +55,10 @@ def input_sized_width(
     serializes onto one core. Returns 0 ("add no exchange") when the scan
     itself provides ≥ core-count splits — at corpus scale re-shuffling the
     rows is pure waste, the splits give the parallelism — or when the input
-    is too small/unreadable; otherwise ~per_task_bytes of on-disk input per
-    task, capped at defaultParallelism. Derived from INPUT SIZE, never bare
-    core count (the r15 simhash lesson: a 32-wide exchange of a 594 KB
-    input was the round's one confirmed regression)."""
+    is too small/unreadable; otherwise ``bytes_width`` of the on-disk input.
+    Derived from INPUT SIZE, never bare core count (the r15 simhash lesson:
+    a 32-wide exchange of a 594 KB input was the round's one confirmed
+    regression)."""
     cores = spark.sparkContext.defaultParallelism
     path = os.path.join(sf_dir, f"{name}.parquet")
     try:
@@ -61,6 +75,4 @@ def input_sized_width(
             nbytes = os.path.getsize(path)
     except OSError:
         return 0
-    if nbytes // (128 << 20) >= cores:
-        return 0
-    return min(cores, int(nbytes // max(1, per_task_bytes)))
+    return bytes_width(nbytes, cores, per_task_bytes)

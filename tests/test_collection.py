@@ -20,6 +20,7 @@ Divergence checks (ours, not the reference's):
 from __future__ import annotations
 
 import math
+import os
 
 import pytest
 from pyspark.sql import types as T
@@ -257,6 +258,164 @@ def test_compact_merges_small_files(spark, tmp_path):
     assert len(parquet_files) == n_files
     after = {r["__id__"] for r in VectorCollection.open(spark, 4, path).df.collect()}
     assert after == before and len(after) == 20
+
+
+def test_width_rules_are_pure_byte_arithmetic():
+    """The byte-to-width rule shared by the table loaders and the
+    collection writer, pinned without a Spark session."""
+    from nano_vectordb_rs_spark.collection import file_width
+    from nano_vectordb_rs_spark.sources.tables import bytes_width
+
+    kb, mb = 1 << 10, 1 << 20
+    # bytes_width keeps input_sized_width's 0 = "add no exchange" cases
+    assert bytes_width(9 * mb, 4, mb) == 4
+    assert bytes_width(3 * mb + 1, 4, mb) == 3
+    assert bytes_width(200 * kb, 4, mb) == 0  # under one task's budget
+    assert bytes_width(512 * mb, 4, mb) == 0  # 128 MB splits give 4 tasks
+    assert bytes_width(400 * mb, 32, mb) == 32
+    assert bytes_width(5 * mb, 4, 64 * kb) == 4
+    # the writer: at least one file, at most one per core, and 128 MB files
+    # once the collection outgrows the cores
+    assert file_width(9 * mb, 4) == 4
+    assert file_width(200 * kb, 4) == 1
+    assert file_width(0, 4) == 1
+    assert file_width(mb - 1, 4) == 1
+    assert file_width(3 * mb // 2, 4) == 3
+    assert file_width(400 * mb, 32) == 32
+    assert file_width(512 * mb, 4) == 4
+    assert file_width(10 * 1024 * mb, 4) == 80
+
+
+def _single_row_group_store(path, rows, dim, seed=0):
+    """A collection directory as an external writer leaves it: one Parquet
+    file holding one row group of unit vectors. Rows 1-3 repeat row 0's
+    vector, so a query near it has score ties."""
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    x = np.random.default_rng(seed).standard_normal((rows, dim)).astype(np.float32)
+    x[1:4] = x[0]
+    x /= np.linalg.norm(x, axis=1, keepdims=True)
+    table = pa.table(
+        {
+            "__id__": [f"r{i:05d}" for i in range(rows)],
+            "vector": pa.array(list(x), pa.list_(pa.float32())),
+            "cat": pa.array(np.arange(rows) % 5, pa.int32()),
+        }
+    )
+    os.makedirs(path)
+    pq.write_table(table, os.path.join(path, "part-00000.parquet"), row_group_size=rows)
+    return x
+
+
+def _rows_per_partition(df):
+    from pyspark.sql import functions as F
+
+    return [
+        r["count"]
+        for r in df.groupBy(F.spark_partition_id().alias("p")).count().collect()
+    ]
+
+
+def test_save_writes_core_balanced_id_hashed_files(spark, tmp_path):
+    """A store opened from one row group scans in one task; after an upsert
+    and save() it is one file per width slot with balanced rows."""
+    path = str(tmp_path / "big")
+    dim = 256
+    x = _single_row_group_store(path, 2560, dim)  # ~2.6 MB
+    c = VectorCollection.open(spark, dim, path)
+    assert _rows_per_partition(c.df) == [2560]
+    c.upsert(
+        spark.createDataFrame(
+            [(f"new{i}", [float(v) for v in x[i]], 1) for i in range(64)],
+            "`__id__` string, vector array<float>, cat int",
+        )
+    )
+    width = c._file_width()
+    cores = spark.sparkContext.defaultParallelism
+    assert width >= min(cores, 4)
+    c.save()
+    files = [f for f in os.listdir(path) if f.endswith(".parquet")]
+    assert len(files) == width
+    counts = _rows_per_partition(VectorCollection.open(spark, dim, path).df)
+    assert len(counts) == width and sum(counts) == 2560 + 64
+    assert max(counts) <= 1.5 * (sum(counts) / len(counts))
+
+
+def test_tiny_collection_saves_one_file(spark, coll):
+    coll.upsert(
+        make_batch(
+            spark,
+            [("a", [1, 0, 0, 0], "x"), ("b", [0, 1, 0, 0], "y"), ("c", [0, 0, 1, 0], None)],
+        )
+    )
+    coll.save()
+    assert len([f for f in os.listdir(coll.path) if f.endswith(".parquet")]) == 1
+    snap = coll.save_snapshot()
+    snap_dir = os.path.join(coll.path + ".snapshots", f"v{snap}")
+    assert len([f for f in os.listdir(snap_dir) if f.endswith(".parquet")]) == 1
+
+
+def test_save_of_unsized_plan_writes_at_most_one_file_per_core(spark, coll):
+    """A plan the optimizer cannot size (a feed of driver rows is an RDD)
+    is written one file per core at most, not ~2**63 / 128 MB files."""
+    coll.upsert(make_batch(spark, [("a", [1, 0, 0, 0], "x")]))
+    coll.save()
+    coll.apply_changes(
+        spark.createDataFrame(
+            [("b", "added", [0.0, 1.0, 0.0, 0.0], "y")],
+            "`__id__` string, change string, vector array<float>, tag string",
+        )
+    )
+    assert coll._file_width() == spark.sparkContext.defaultParallelism
+    coll.save()
+    files = [f for f in os.listdir(coll.path) if f.endswith(".parquet")]
+    assert 1 <= len(files) <= spark.sparkContext.defaultParallelism
+    assert sorted(r["__id__"] for r in coll.df.collect()) == ["a", "b"]
+
+
+def test_rebalancing_save_keeps_answers_and_score_bits(spark, tmp_path):
+    """query, query_batch and get answer the same ids with the same score
+    and vector bits before and after save() rewrites the layout; the score
+    ties among rows 0-3 still break on __id__."""
+    from pyspark.sql import functions as F
+
+    path = str(tmp_path / "rebalance")
+    dim = 256
+    x = _single_row_group_store(path, 2560, dim, seed=3)
+    c = VectorCollection.open(spark, dim, path)
+    q0 = [float(v) for v in x[0]]
+    q1 = [float(v) + 0.01 for v in x[7]]
+    blocks = spark.createDataFrame(
+        [("q0", q0), ("q1", q1)], "`__id__` string, vector array<float>"
+    )
+    ids = [f"r{i:05d}" for i in range(0, 2560, 97)] + ["absent"]
+
+    def answers():
+        single = [
+            [(r["__id__"], r["__metrics__"]) for r in rows.collect()]
+            for rows in (
+                c.query(q0, top_k=6),
+                c.query(q1, top_k=10, where=F.col("cat") == 2),
+                c.query(q1, top_k=10, better_than=0.05),
+            )
+        ]
+        batch = [
+            (r["__query_id__"], r["__id__"], r["__metrics__"], r["rank"])
+            for r in c.query_batch(blocks, top_k=5).collect()
+        ]
+        got = sorted((r["__id__"], list(r["vector"])) for r in c.get(ids).collect())
+        ordered = [r["__id__"] for r in c.get(ids, ordered=True).collect()]
+        return single, batch, got, ordered
+
+    before = answers()
+    assert _rows_per_partition(c.df) == [2560]
+    c.save()
+    assert len(_rows_per_partition(c.df)) > 1
+    after = answers()
+    assert after == before
+    assert [i for i, _ in before[0][0][:4]] == ["r00000", "r00001", "r00002", "r00003"]
 
 
 def test_query_batch_matches_single_queries(spark, tmp_path):
