@@ -479,11 +479,16 @@ def timed_structured(fn, runs: int, cap: "StructCapture | None") -> float:
     return round(min(times), 4)
 
 
-def load_prior_structure() -> dict[str, dict]:
+def load_prior_structure(
+    master: str, shuffle_partitions: str | int, sf: str
+) -> dict[str, dict]:
     """jobs/stages/tasks per query from the COMMITTED BENCH.json (HEAD) —
     the steal-immune half of the regression tripwire. Only full records
     written since r16 carry ``structure``; absence means no prior and no
-    structural tripwire (never a failure)."""
+    structural tripwire (never a failure). A record from another config
+    (``master``, ``shuffle_partitions``) or scale factor counts as no
+    prior: task counts follow the partition count, so a local[8] record
+    read by a local[32] run flagged ~30 of 152 queries on unchanged code."""
     try:
         import subprocess
 
@@ -502,7 +507,15 @@ def load_prior_structure() -> dict[str, dict]:
         shown = _git("show", f"HEAD:{pfx}BENCH.json")
         if shown.returncode != 0:
             return {}
-        st = json.loads(shown.stdout).get("structure")
+        rec = json.loads(shown.stdout)
+        cfg = rec.get("config") or {}
+        if (
+            cfg.get("master") != master
+            or str(cfg.get("shuffle_partitions")) != str(shuffle_partitions)
+            or str(rec.get("sf")) != str(sf)
+        ):
+            return {}
+        st = rec.get("structure")
         return st if isinstance(st, dict) else {}
     except Exception:  # noqa: BLE001 — no git / unparseable prior
         return {}
@@ -784,7 +797,11 @@ def main() -> None:
     # query alongside the wall time, captured around every timed run and
     # recorded from the final (steady-state) one
     structure: dict[str, dict] = {}
-    prior_structure = load_prior_structure()
+    prior_structure = load_prior_structure(
+        spark.sparkContext.master,
+        spark.conf.get("spark.sql.shuffle.partitions"),
+        SF_DIR.rstrip("/").split("sf")[-1],
+    )
 
     def timed_headline(name: str, fn, retime: bool = False) -> float:
         cap = StructCapture(spark)

@@ -33,7 +33,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from nano_vectordb_rs_spark.sources.tables import input_sized_width, load_table
+from nano_vectordb_rs_spark.sources.tables import load_table, spread_table
 
 N_HASHES = 8
 N_BANDS = 4  # rows-per-band = 2
@@ -715,13 +715,10 @@ def exact_substring_contamination(spark: SparkSession, sf_dir: str) -> DataFrame
         SPLIT_VALID_PCT,
     )
 
-    docs = load_table(spark, sf_dir, "documents")
     # r16: the window explode + md5 bucketing ran on the single-task
-    # fixture scan; input-sized exchange (interleaved A/B at sf0.1: med
-    # 1.63 → 1.13 s, identical rows), width 0 at corpus scale.
-    uw = input_sized_width(spark, sf_dir, "documents", 64 << 10)
-    if uw > 1:
-        docs = docs.repartition(uw)
+    # fixture scan; spreading it measured med 1.63 → 1.13 s (interleaved
+    # A/B at sf0.1, identical rows).
+    docs = spread_table(spark, sf_dir, "documents")
     bucket = (
         F.conv(F.substring(F.md5(F.col("doc_id").cast("string")), 1, 8), 16, 10)
         .cast("bigint") % 100
@@ -807,45 +804,6 @@ EXACT_SUBSTRING_SQL = _exact_substring_sql()
 # --- SimHash ----------------------------------------------------------------
 
 
-def _simhash_exchange_width(spark: SparkSession, sf_dir: str) -> int:
-    """Exchange width ahead of simhash's word explode, derived from INPUT
-    SIZE, not core count (r16, VERDICT r15 task 2). The r15 bare
-    ``defaultParallelism`` width was the round's one driver-confirmed
-    regression: fanning 5k tiny rows over 32 tasks costs more exchange
-    than it buys md5 parallelism. Interleaved same-session A/B on a quiet
-    window (steal ≤0.1%, 6 reps each, rotated order) re-measured the
-    whole curve at sf0.1: width 0 → 1.44–1.56 s, 4 → 1.08–1.25 s,
-    **8 → 0.94–0.99 s**, 16 → 0.91–1.26 s, 32 → 1.15–1.75 s. Policy:
-    ~64 KB of on-disk text per task (sf0.1's 594 KB → width 9 ≈ the
-    measured optimum), capped at defaultParallelism, and NO exchange at
-    all once the scan itself provides ≥ core-count splits (at corpus
-    scale re-shuffling the text payload is pure waste — the splits give
-    the parallelism; guide §2.2/§2.5). ``SPARK_GRAFT_SIMHASH_WIDTH``
-    overrides for A/B adjudication (0/1 disables the exchange)."""
-    raw = os.environ.get("SPARK_GRAFT_SIMHASH_WIDTH")
-    if raw is not None:
-        return max(0, int(raw))
-    cores = spark.sparkContext.defaultParallelism
-    path = os.path.join(sf_dir, "documents.parquet")
-    try:
-        if os.path.isdir(path):
-            parts = [
-                os.path.join(path, f)
-                for f in os.listdir(path)
-                if f.endswith(".parquet")
-            ]
-            if len(parts) >= cores:
-                return 0  # the scan alone spreads the md5 work
-            nbytes = sum(os.path.getsize(p) for p in parts)
-        else:
-            nbytes = os.path.getsize(path)
-    except OSError:
-        return 0  # non-local storage: scan splits provide parallelism
-    if nbytes // (128 << 20) >= cores:
-        return 0
-    return min(cores, int(nbytes // (64 << 10)))
-
-
 def simhash_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """16-bit SimHash per document, grouped into duplicate buckets.
 
@@ -859,18 +817,18 @@ def simhash_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregate partial-combines map-side and the shuffle carries one
     16-int row per doc instead of 16 md5-string rows per word; the old
     (doc, bit)-keyed shuffle disappears entirely (guide §2.3/§2.4). The
-    (doc_id, text) exchange ahead of the word explode spreads the
-    md5-per-word work off the fixture's single-row-group scan — its
-    width is INPUT-SIZED, capped at core count, and dropped entirely
-    once the scan has core-count splits (r16 re-adjudication; see
-    _simhash_exchange_width for the measured curve) — and the downstream
-    doc-keyed aggregate reuses its partitioning, so it adds no extra
-    shuffle locally either."""
-    docs = load_table(spark, sf_dir, "documents")
-    base = docs.select("doc_id", "text")
-    n_part = _simhash_exchange_width(spark, sf_dir)
-    if n_part > 1:
-        base = base.repartition(n_part, "doc_id")
+    ``spread_table`` exchange, hashed on doc_id ahead of the word explode,
+    spreads the md5-per-word work, and the downstream doc-keyed aggregate
+    reuses its partitioning, so it adds no extra shuffle locally either.
+
+    r16 width curve at sf0.1 (interleaved same-session A/B on a quiet
+    window, steal ≤0.1%, 6 reps each, rotated order): width 0 →
+    1.44–1.56 s, 4 → 1.08–1.25 s, **8 → 0.94–0.99 s**, 16 → 0.91–1.26 s,
+    32 → 1.15–1.75 s; the 64 KB-per-task default gives width 9 for the
+    594 KB documents file, ≈ the measured optimum."""
+    base = spread_table(spark, sf_dir, "documents", keys=("doc_id",)).select(
+        "doc_id", "text"
+    )
     words = (
         base.select(
             "doc_id", F.explode(F.array_distinct(F.split("text", " "))).alias("w")

@@ -36,7 +36,7 @@ from nano_vectordb_rs_spark.functions.vector import (
     cosine_expr,
     duck_cosine_lit,
 )
-from nano_vectordb_rs_spark.sources.tables import input_sized_width, load_table
+from nano_vectordb_rs_spark.sources.tables import load_table, spread_table
 
 QUERY_TERMS = ["spark", "merge", "window"]  # fixture-vocabulary keyword query
 BM25_K1 = 1.2
@@ -62,14 +62,11 @@ def lexical_search_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     r16: both legs (the df/len consts aggregate and the per-row BM25
     scoring, each several full-text splits per row) ran on the
-    single-row-group fixture scan's ONE task; an input-sized exchange
-    spreads them (interleaved A/B at sf0.1 through hybrid_search_rrf:
-    med 1.36 → 0.99 s, results identical — consts are exact integer sums,
-    scores are per-row). Width 0 at corpus scale (guide §2.2/§2.5)."""
-    docs = load_table(spark, sf_dir, "documents")
-    uw = input_sized_width(spark, sf_dir, "documents", 64 << 10)
-    if uw > 1:
-        docs = docs.repartition(uw)
+    single-row-group fixture scan's ONE task; ``spread_table`` spreads
+    them (interleaved A/B at sf0.1 through hybrid_search_rrf: med
+    1.36 → 0.99 s, results identical — consts are exact integer sums,
+    scores are per-row)."""
+    docs = spread_table(spark, sf_dir, "documents")
     consts = docs.agg(
         F.count("*").alias("n_docs"),
         F.sum(F.size(F.split("text", " "))).alias("sum_len"),

@@ -43,7 +43,7 @@ from nano_vectordb_rs_spark.functions.vector import (
     norm_expr,
 )
 from nano_vectordb_rs_spark.operators.knn import KNN_TOPK_SQL
-from nano_vectordb_rs_spark.sources.tables import input_sized_width, load_table
+from nano_vectordb_rs_spark.sources.tables import load_table, spread_table
 
 N_QUERIES = 20  # knn_join query block: vec_id < 20
 JOIN_K = 5
@@ -104,13 +104,9 @@ def knn_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     r16: with the query block broadcast there is NO exchange below the
     pre-rank, so the whole corpus × |Q| scoring ran on the single-row-
-    group fixture scan's one task; an input-sized exchange spreads it
-    (interleaved A/B at sf0.1: med 1.52 → 0.99 s, identical rows).
-    Width 0 once the scan has core-count splits (guide §2.2/§2.5)."""
-    emb = load_table(spark, sf_dir, "embeddings")
-    uw = input_sized_width(spark, sf_dir, "embeddings", 64 << 10)
-    if uw > 1:
-        emb = emb.repartition(uw)
+    group fixture scan's one task; ``spread_table`` spreads it
+    (interleaved A/B at sf0.1: med 1.52 → 0.99 s, identical rows)."""
+    emb = spread_table(spark, sf_dir, "embeddings")
     queries = emb.filter(F.col("vec_id") < N_QUERIES).select(
         F.col("vec_id").alias("query_id"),
         F.col("embedding").alias("query_vec"),

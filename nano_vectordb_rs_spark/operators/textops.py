@@ -10,8 +10,6 @@ parallel with a tiny shuffle.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -21,7 +19,11 @@ from nano_vectordb_rs_spark.functions.text import (
     occurrences,
     predicted_lang_case,
 )
-from nano_vectordb_rs_spark.sources.tables import input_sized_width, load_table
+from nano_vectordb_rs_spark.sources.tables import (
+    load_table,
+    spread_table,
+    table_file_sizes,
+)
 
 DEC = "decimal(28,10)"
 
@@ -72,12 +74,9 @@ def lang_id(spark: SparkSession, sf_dir: str) -> DataFrame:
     per language, all scan-local.)
 
     r16: "cheap" × 15 markers still serialized on the single-task fixture
-    scan; input-sized exchange, med 0.63 → 0.48 s (interleaved A/B,
-    identical rows), width 0 at corpus scale."""
-    docs = load_table(spark, sf_dir, "documents")
-    uw = input_sized_width(spark, sf_dir, "documents", 64 << 10)
-    if uw > 1:
-        docs = docs.repartition(uw)
+    scan; ``spread_table`` measured med 0.63 → 0.48 s (interleaved A/B,
+    identical rows)."""
+    docs = spread_table(spark, sf_dir, "documents")
     scored = docs.select(
         "lang",
         *[
@@ -142,14 +141,10 @@ def quality_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     Every intermediate is integer or a per-row double op, the aggregate goes
     through DECIMAL — hash-stable at any parallelism.
 
-    r16: input-sized exchange off the single-task fixture scan (med
+    r16: ``spread_table`` off the single-task fixture scan (med
     0.52 → 0.47 s, interleaved A/B, identical rows — the docstring's
-    "hash-stable at any parallelism" is exactly the license); width 0 at
-    corpus scale."""
-    docs = load_table(spark, sf_dir, "documents")
-    uw = input_sized_width(spark, sf_dir, "documents", 64 << 10)
-    if uw > 1:
-        docs = docs.repartition(uw)
+    "hash-stable at any parallelism" is exactly the license)."""
+    docs = spread_table(spark, sf_dir, "documents")
     return (
         docs.select("lang", quality_col().alias("q"))
         .groupBy("lang")
@@ -218,13 +213,9 @@ def doc_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
     fingerprints + a deterministic sample of fingerprint prefixes.
 
     r16: the per-shingle md5 chain ran on the single-row-group scan's ONE
-    task; an input-sized exchange spreads it (interleaved A/B at sf0.1:
-    med 0.90 → 0.56 s, identical rows). Width 0 at corpus scale — see
-    input_sized_width (guide §2.2/§2.5)."""
-    docs = load_table(spark, sf_dir, "documents")
-    uw = input_sized_width(spark, sf_dir, "documents", 64 << 10)
-    if uw > 1:
-        docs = docs.repartition(uw)
+    task; ``spread_table`` spreads it (interleaved A/B at sf0.1:
+    med 0.90 → 0.56 s, identical rows)."""
+    docs = spread_table(spark, sf_dir, "documents")
     # bind split() ONCE as a column: Catalyst cannot CSE a subexpression into
     # a lambda body, so inlining split(text) there would re-tokenize the whole
     # document for every shingle term — O(words²) instead of O(words)
@@ -743,15 +734,8 @@ def _documents_bytes(sf_dir: str) -> int:
     """On-disk size of the documents table; 'unknown' (object store paths,
     missing files) reads as LARGE so cluster deployments keep the
     checkpointed single-derivation form."""
-    path = os.path.join(sf_dir, "documents.parquet")
     try:
-        if os.path.isdir(path):
-            return sum(
-                os.path.getsize(os.path.join(path, f))
-                for f in os.listdir(path)
-                if f.endswith(".parquet")
-            )
-        return os.path.getsize(path)
+        return sum(table_file_sizes(sf_dir, "documents"))
     except OSError:
         return 1 << 40
 
@@ -912,13 +896,10 @@ def pii_scrub_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     mergeable-checksum trick as events_props_scrub).
 
     r16: that projection ran on the single-row-group fixture scan's ONE
-    task; an input-sized exchange spreads the regex work (interleaved
-    A/B at sf0.1: med 0.64 → 0.45 s, results identical — the checksum is
-    a commutative sum). Width 0 at corpus scale (guide §2.2/§2.5)."""
-    docs = load_table(spark, sf_dir, "documents")
-    uw = input_sized_width(spark, sf_dir, "documents", 64 << 10)
-    if uw > 1:
-        docs = docs.repartition(uw)
+    task; ``spread_table`` spreads the regex work (interleaved A/B at
+    sf0.1: med 0.64 → 0.45 s, results identical — the checksum is a
+    commutative sum)."""
+    docs = spread_table(spark, sf_dir, "documents")
     idc = F.col("doc_id")
     email_sfx = F.when(
         idc % 13 == 0,

@@ -41,19 +41,6 @@ def get_spark(app_name: str = "nano-vectordb-rs-spark", shuffle_partitions: int 
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        # AQE post-shuffle coalescing floor. Spark's default (1m) sizes
-        # partitions for byte-bound cluster stages; several of this
-        # engine's post-shuffle stages are CPU-bound per row (pair-verify
-        # dot products, HOF folds), where coalescing a sub-MB shuffle to
-        # one partition serializes a 32-core box onto one core (measured
-        # 4x on the near-dup verify). The floor is env-tunable because the
-        # right value is per-deployment: keep partitions >= cores' worth
-        # of CPU work locally; raise toward 1m+ on clusters where tasks
-        # are I/O-bound and scheduling dominates.
-        .config(
-            "spark.sql.adaptive.coalescePartitions.minPartitionSize",
-            os.environ.get("SPARK_GRAFT_AQE_MIN_PARTITION_SIZE", "1m"),
-        )
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         # high-entropy float vectors don't compress; codec CPU was ~10x the

@@ -46,33 +46,59 @@ def bytes_width(nbytes: int, cores: int, per_task_bytes: int) -> int:
     return min(cores, nbytes // max(1, per_task_bytes))
 
 
+def table_file_sizes(sf_dir: str, name: str) -> list[int]:
+    """On-disk byte size of each Parquet file of table ``name`` (one entry
+    for a single-file table). Raises ``OSError`` when the path cannot be
+    read locally (missing, or on an object store)."""
+    path = os.path.join(sf_dir, f"{name}.parquet")
+    if os.path.isdir(path):
+        return [
+            os.path.getsize(os.path.join(path, f))
+            for f in os.listdir(path)
+            if f.endswith(".parquet")
+        ]
+    return [os.path.getsize(path)]
+
+
 def input_sized_width(
     spark: SparkSession, sf_dir: str, name: str, per_task_bytes: int
 ) -> int:
-    """Exchange width for unstarving a CPU-heavy stage off a scan with too
-    few splits (r16; guide §2.2/§2.5). The fixture files are single parquet
-    row groups, so every scan is ONE task and any compute directly above it
-    serializes onto one core. Returns 0 ("add no exchange") when the scan
-    itself provides ≥ core-count splits — at corpus scale re-shuffling the
-    rows is pure waste, the splits give the parallelism — or when the input
-    is too small/unreadable; otherwise ``bytes_width`` of the on-disk input.
-    Derived from INPUT SIZE, never bare core count (the r15 simhash lesson:
-    a 32-wide exchange of a 594 KB input was the round's one confirmed
-    regression)."""
+    """Exchange width that spreads table ``name``'s scan (see
+    ``spread_table``): ``bytes_width`` of its on-disk size. 0 ("add no
+    exchange") when the table has ≥ core-count files, whose splits already
+    give the parallelism, or when it cannot be read locally."""
     cores = spark.sparkContext.defaultParallelism
-    path = os.path.join(sf_dir, f"{name}.parquet")
     try:
-        if os.path.isdir(path):
-            parts = [
-                os.path.join(path, f)
-                for f in os.listdir(path)
-                if f.endswith(".parquet")
-            ]
-            if len(parts) >= cores:
-                return 0
-            nbytes = sum(os.path.getsize(p) for p in parts)
-        else:
-            nbytes = os.path.getsize(path)
+        sizes = table_file_sizes(sf_dir, name)
     except OSError:
         return 0
-    return bytes_width(nbytes, cores, per_task_bytes)
+    if len(sizes) >= cores:
+        return 0
+    return bytes_width(sum(sizes), cores, per_task_bytes)
+
+
+def spread_table(
+    spark: SparkSession,
+    sf_dir: str,
+    name: str,
+    per_task_bytes: int = 64 << 10,
+    keys: tuple[str, ...] = (),
+) -> DataFrame:
+    """``load_table``, spread over the cores for a CPU-heavy scan-local stage.
+
+    The fixture tables are each one Parquet row group, so each scan is ONE
+    task and any per-row compute directly above it serializes onto one
+    core. When ``input_sized_width`` is above 1 the table comes back
+    repartitioned to that width (round-robin, or hashed on ``keys``):
+    ~``per_task_bytes`` of on-disk input per task, capped at core count,
+    and 0 (no exchange) at corpus scale, where the scan's own splits give
+    the parallelism. The width follows INPUT SIZE, never bare core count:
+    a 32-wide exchange of simhash's 594 KB input was r15's one confirmed
+    regression (guide §2.2/§2.5)."""
+    # the module global, not a captured reference: a traced run swaps
+    # ``tables.load_table`` for a wrapper that counts the reads
+    df = load_table(spark, sf_dir, name)
+    width = input_sized_width(spark, sf_dir, name, per_task_bytes)
+    if width > 1:
+        df = df.repartition(width, *keys)
+    return df

@@ -1,12 +1,14 @@
 #!/usr/bin/env python
-"""Capture `.explain("formatted")` output for named declared queries.
+"""Capture `.explain("formatted")` output for declared queries.
 
-Usage:  python scripts/plan_capture.py OUTDIR SUFFIX name [name ...]
+Usage:  python scripts/plan_capture.py OUTDIR SUFFIX [name ...]
+
+With no query names, every declared query is captured.
 
 Env:
   PLAN_REPO   repo root whose __spark_entry__ to import (default: parent
-              of this script) — point it at a detached worktree to capture
-              the committed "before" plan of a query being optimized.
+              of this script) — point it at a `git archive` checkout of
+              another commit to capture its "before" plans.
   SPARK_GRAFT_SF_DIR  data dir (default /root/testdata/sf0.1).
 
 Writes OUTDIR/<name>_<SUFFIX>.txt per query.
@@ -32,11 +34,11 @@ SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
 def main() -> None:
     outdir, suffix = sys.argv[1], sys.argv[2]
-    names = sys.argv[3:]
     os.makedirs(outdir, exist_ok=True)
     spark = get_spark("plan-capture")
     spark.sparkContext.setLogLevel("ERROR")
     queries = entry_mod.queries()
+    names = sys.argv[3:] or list(queries)
     for name in names:
         df = queries[name](spark, SF_DIR)
         plan = df._sc._jvm.PythonSQLUtils.explainString(

@@ -507,3 +507,48 @@ def test_timed_structured_records_final_run_structure():
     assert cap.last == {"jobs": 3, "stages": 0, "tasks": 0}
     # cap=None path stays pure timing
     assert bench.timed_structured(lambda: None, 2, None) >= 0.0
+
+
+def test_load_prior_structure_only_from_the_same_config(tmp_path, monkeypatch):
+    """Task counts follow the partition count, so a structure prior from
+    another config or scale factor must count as no prior: a committed
+    local[8] record read by a local[32] run flagged ~30 of 152 queries on
+    unchanged code."""
+    import subprocess
+
+    def git(*argv):
+        subprocess.run(
+            ["git", "-C", str(tmp_path), *argv],
+            check=True,
+            capture_output=True,
+            env={
+                "GIT_AUTHOR_NAME": "t",
+                "GIT_AUTHOR_EMAIL": "t@t",
+                "GIT_COMMITTER_NAME": "t",
+                "GIT_COMMITTER_EMAIL": "t@t",
+                "HOME": str(tmp_path),
+                "PATH": bench.os.environ["PATH"],
+            },
+        )
+
+    structure = {"q_a": {"jobs": 2, "stages": 3, "tasks": 16}}
+    git("init", "-q")
+    (tmp_path / "BENCH.json").write_text(
+        json.dumps(
+            {
+                "structure": structure,
+                "sf": "0.1",
+                "config": {"master": "local[8]", "shuffle_partitions": "8"},
+            }
+        )
+    )
+    git("add", "BENCH.json")
+    git("commit", "-q", "-m", "committed snapshot")
+    monkeypatch.setattr(
+        bench.os.path, "abspath", lambda p: str(tmp_path / "bench.py")
+    )
+    assert bench.load_prior_structure("local[8]", "8", "0.1") == structure
+    assert bench.load_prior_structure("local[8]", 8, "0.1") == structure
+    assert bench.load_prior_structure("local[32]", "32", "0.1") == {}
+    assert bench.load_prior_structure("local[8]", "32", "0.1") == {}
+    assert bench.load_prior_structure("local[8]", "8", "0.001") == {}

@@ -8,12 +8,17 @@ notices.
 
 from __future__ import annotations
 
+import os
+
 import pyspark.sql.functions as F
 import pytest
 
 import __spark_entry__ as entry_mod
 from nano_vectordb_rs_spark.plans import audit_plan
 from tests.conftest import SF_DIR
+
+# the fixture scales live side by side: <data>/sf0.001, <data>/sf0.1, ...
+DATA_DIR = os.path.dirname(SF_DIR.rstrip("/"))
 
 
 @pytest.fixture(scope="module")
@@ -586,22 +591,28 @@ def test_tpch_q2_one_window_shuffle_broadcast_dims(spark, queries):
     assert any("p_size" in p for p in a["pushed_filters"])
 
 
-def test_simhash_exchange_width_is_input_sized(spark, monkeypatch):
-    """r16 (VERDICT r15 task 2): the pre-explode exchange width derives
-    from input bytes (~64 KB/task), caps at core count, and disappears
-    for tiny or non-local inputs — never bare defaultParallelism (the
-    driver-confirmed r15 regression)."""
-    from nano_vectordb_rs_spark.operators import dedup
+def test_simhash_exchange_width_is_input_sized(spark, queries):
+    """The pre-explode exchange of simhash_docs derives its width from
+    input bytes (~64 KB/task), caps at core count, and disappears for
+    tiny or non-local inputs — never bare defaultParallelism (the r15
+    regression)."""
+    from nano_vectordb_rs_spark.sources.tables import input_sized_width
 
-    monkeypatch.setenv("SPARK_GRAFT_SIMHASH_WIDTH", "5")
-    assert dedup._simhash_exchange_width(spark, "/root/testdata/sf0.1") == 5
-    monkeypatch.delenv("SPARK_GRAFT_SIMHASH_WIDTH")
-    w = dedup._simhash_exchange_width(spark, "/root/testdata/sf0.1")
+    def doc_id_exchanges(sf_dir):
+        plan = queries["simhash_docs"](spark, sf_dir)._jdf.queryExecution().optimizedPlan()
+        return [
+            n.numPartitions() for n in _plan_nodes(plan)
+            if n.nodeName() == "RepartitionByExpression"
+        ]
+
+    w = input_sized_width(spark, f"{DATA_DIR}/sf0.1", "documents", 64 << 10)
     assert 1 < w <= spark.sparkContext.defaultParallelism
+    assert doc_id_exchanges(f"{DATA_DIR}/sf0.1") == [w]
     # tiny fixture: below one 64 KB task's worth -> exchange elided
-    assert dedup._simhash_exchange_width(spark, "/root/testdata/sf0.001") == 0
+    assert input_sized_width(spark, f"{DATA_DIR}/sf0.001", "documents", 64 << 10) == 0
+    assert doc_id_exchanges(f"{DATA_DIR}/sf0.001") == []
     # unreadable path (object store case): scan splits provide parallelism
-    assert dedup._simhash_exchange_width(spark, "/nonexistent") == 0
+    assert input_sized_width(spark, "/nonexistent", "documents", 64 << 10) == 0
 
 
 def test_phrase_collocations_checkpoint_gate(spark, monkeypatch):
@@ -627,7 +638,93 @@ def test_input_sized_width_policy(spark):
     unreadable paths, or scans that already provide core-count splits."""
     from nano_vectordb_rs_spark.sources.tables import input_sized_width
 
-    w = input_sized_width(spark, "/root/testdata/sf0.1", "lineitem", 1 << 20)
-    assert 1 < w <= spark.sparkContext.defaultParallelism
-    assert input_sized_width(spark, "/root/testdata/sf0.001", "lineitem", 1 << 20) == 0
-    assert input_sized_width(spark, "/nonexistent", "lineitem", 1 << 20) == 0
+    cores = spark.sparkContext.defaultParallelism
+    for name, per_task in (("lineitem", 1 << 20), ("documents", 64 << 10)):
+        w = input_sized_width(spark, f"{DATA_DIR}/sf0.1", name, per_task)
+        assert 1 < w <= cores
+        # tiny fixture: below one task's budget -> exchange elided
+        assert input_sized_width(spark, f"{DATA_DIR}/sf0.001", name, per_task) == 0
+        # unreadable path (object store case): scan splits provide parallelism
+        assert input_sized_width(spark, "/nonexistent", name, per_task) == 0
+
+
+# query -> (table, per-task bytes, hash keys) of its spread_table call
+SPREAD_QUERIES = {
+    "lexical_search_docs": ("documents", 64 << 10, ()),
+    "knn_join": ("embeddings", 64 << 10, ()),
+    "bigram_stats": ("documents", 64 << 10, ()),
+    "exact_substring_contamination": ("documents", 64 << 10, ()),
+    "lang_id": ("documents", 64 << 10, ()),
+    "quality_scores": ("documents", 64 << 10, ()),
+    "doc_fingerprints": ("documents", 64 << 10, ()),
+    "pii_scrub_report": ("documents", 64 << 10, ()),
+    "tpch_q1_pricing": ("lineitem", 1 << 20, ()),
+    "simhash_docs": ("documents", 64 << 10, ("doc_id",)),
+}
+
+
+def _plan_nodes(node):
+    yield node
+    children = node.children()
+    for i in range(children.size()):
+        yield from _plan_nodes(children.apply(i))
+
+
+def _relation_path(node) -> str | None:
+    if node.nodeName() != "LogicalRelation":
+        return None
+    return node.relation().location().rootPaths().head().toString()
+
+
+@pytest.mark.parametrize("name", sorted(SPREAD_QUERIES))
+def test_spread_queries_exchange_directly_over_their_table(spark, queries, name):
+    """The spread policy's plan shape: when the input-sized width is above
+    1 (every spread query at sf0.1), each read of the spread table sits
+    under exactly one exchange of that width — round-robin, or hashed on
+    doc_id for simhash — with only projections and pushed filters between
+    it and the scan; otherwise (sf0.001, except knn_join's 193 KB
+    embeddings file, width 2) no exchange is added."""
+    from nano_vectordb_rs_spark.sources.tables import input_sized_width
+
+    table, per_task, keys = SPREAD_QUERIES[name]
+    kind = "RepartitionByExpression" if keys else "Repartition"
+    assert input_sized_width(spark, f"{DATA_DIR}/sf0.1", table, per_task) > 1
+    for sf_dir in (f"{DATA_DIR}/sf0.1", f"{DATA_DIR}/sf0.001"):
+        width = input_sized_width(spark, sf_dir, table, per_task)
+        plan = queries[name](spark, sf_dir)._jdf.queryExecution().optimizedPlan()
+        nodes = list(_plan_nodes(plan))
+        spreads = [n for n in nodes if n.nodeName().startswith("Repartition")]
+        if width <= 1:
+            assert spreads == [], sf_dir
+            continue
+        reads = [n for n in nodes if (_relation_path(n) or "").endswith(f"/{table}.parquet")]
+        assert spreads and len(spreads) == len(reads)
+        for node in spreads:
+            assert node.nodeName() == kind
+            assert node.numPartitions() == width
+            if keys:
+                exprs = node.partitionExpressions()
+                assert [exprs.apply(i).sql() for i in range(exprs.size())] == list(keys)
+            child = node.child()
+            while child.nodeName() in ("Project", "Filter"):
+                child = child.child()
+            assert (_relation_path(child) or "").endswith(f"/{table}.parquet")
+
+
+def test_spread_table_reads_through_module_load_table(spark, monkeypatch):
+    """spread_table looks ``load_table`` up in its module at call time:
+    a traced run swaps that global for a counting wrapper, and every
+    spread read must still be counted."""
+    from nano_vectordb_rs_spark.sources import tables
+
+    calls = []
+    orig = tables.load_table
+
+    def counting(spark_, sf_dir, name):
+        calls.append(name)
+        return orig(spark_, sf_dir, name)
+
+    monkeypatch.setattr(tables, "load_table", counting)
+    tables.spread_table(spark, f"{DATA_DIR}/sf0.001", "documents")
+    tables.spread_table(spark, f"{DATA_DIR}/sf0.1", "lineitem", 1 << 20)
+    assert calls == ["documents", "lineitem"]
